@@ -71,36 +71,50 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
 
 # ------------------------------------------ codegen'd unrolled folds
 
-# (session → {(input-files-key, col): width}) — the probe is a one-row
-# job; caching per (session, scan file set) keeps a bench's repeated
-# plan builds from re-running it, while a changed input path re-probes.
+# session → {(semanticHash, what): [(frame, value), ...]} — a probe is
+# a one-row or footer-metadata job; caching it per (session, analyzed
+# plan) keeps a bench's repeated plan builds (two bare loads of one
+# path hash equal) from re-running it, while a filtered or otherwise
+# derived frame over the same files is a different plan and re-probes.
 # WeakKeyDictionary: a stopped session's entries vanish with it.
-_WIDTH_CACHE: WeakKeyDictionary = WeakKeyDictionary()
+_PROBE_CACHE: WeakKeyDictionary = WeakKeyDictionary()
+
+
+def _probe(df: DataFrame, what: str, run):
+    """``run()``'s value memoized on ``df``'s analyzed plan: keyed by
+    ``semanticHash()`` and confirmed with ``sameSemantics`` (a hash is
+    not an identity).  Only file-backed frames are cached; computed
+    frames are probed per call, so only pass cheap-to-scan inputs."""
+    try:
+        file_backed = bool(df.inputFiles())
+    except Exception:
+        file_backed = False
+    if not file_backed:
+        return run()
+    entries = _PROBE_CACHE.setdefault(df.sparkSession, {}).setdefault(
+        (df.semanticHash(), what), []
+    )
+    for seen, value in entries:
+        if df.sameSemantics(seen):
+            return value
+    value = run()
+    entries.append((df, value))
+    return value
 
 
 def probe_width(df: DataFrame, col: str = "embedding") -> int | None:
     """Array width of ``col`` from ONE row of ``df`` — a plan-build
     metadata probe (the same class of driver round-trip as the dedup
-    auto-gate's candidate count).  Returns None on an empty frame, in
-    which case the ``*_w`` builders degrade to the interpreted fold.
-    Only file-backed frames are cached; computed frames are probed per
-    call, so only pass cheap-to-scan inputs."""
-    session = df.sparkSession
-    try:
-        key = tuple(sorted(df.inputFiles()))
-    except Exception:
-        key = ()
-    cache = _WIDTH_CACHE.setdefault(session, {})
-    ck = (key, col)
-    if key and ck in cache:
-        return cache[ck]
-    rows = df.select(F.size(F.col(col)).alias("w")).limit(1).collect()
-    width = rows[0]["w"] if rows else None
-    if width is not None and width <= 0:
-        width = None
-    if key:
-        cache[ck] = width
-    return width
+    auto-gate's candidate count), cached by ``_probe``.  Returns None
+    on an empty frame, in which case the ``*_w`` builders degrade to
+    the interpreted fold."""
+
+    def run():
+        rows = df.select(F.size(F.col(col)).alias("w")).limit(1).collect()
+        width = rows[0]["w"] if rows else None
+        return width if width is not None and width > 0 else None
+
+    return _probe(df, col, run)
 
 
 # (kind, names..., width) → parsed Column; Columns are immutable
@@ -142,22 +156,10 @@ def _cached_expr(key: tuple, sql_fn) -> Column:
 
 def probe_count(df: DataFrame) -> int:
     """Row count of a (file-backed) frame as a plan-build probe, cached
-    per (session, input files) like ``probe_width`` — parquet count(*)
-    is footer-metadata fast, and the cache makes a bench loop's
-    repeated plan builds free."""
-    session = df.sparkSession
-    try:
-        key = tuple(sorted(df.inputFiles()))
-    except Exception:
-        key = ()
-    cache = _WIDTH_CACHE.setdefault(session, {})
-    ck = (key, "__count__")
-    if key and ck in cache:
-        return cache[ck]
-    n = df.count()
-    if key:
-        cache[ck] = n
-    return n
+    by ``_probe`` like ``probe_width`` — parquet count(*) is
+    footer-metadata fast, and the cache makes a bench loop's repeated
+    plan builds free."""
+    return _probe(df, "__count__", df.count)
 
 
 def dot_w(a: str, b: str, width: int | None) -> Column:

@@ -121,9 +121,11 @@ def _per_doc_sketch(rows: DataFrame, n_hashes: int, rotate: bool = True) -> Data
     stages both consume this frame; without the cache each would re-run
     the exploded md5 scan (measured ~1 s of the operator's ~3 s steady
     state at sf0.1).  MEMORY_AND_DISK: per-doc sketch+set is the
-    dedup'd shingle corpus — it spills rather than OOMs at scale, and
-    corpora past executor-storage comfort should set
-    ``broadcast_verify=False``, which never builds sets at all."""
+    dedup'd shingle corpus — it spills rather than OOMs at scale.
+    ``broadcast_verify=True`` (the default) builds this frame and lets
+    the gates pick the verify shape; corpora past executor-storage
+    comfort should pass ``broadcast_verify=False``, the narrow shape
+    that never builds sets at all."""
     from pyspark import StorageLevel
 
     lanes = rows.select(
@@ -136,30 +138,14 @@ def _per_doc_sketch(rows: DataFrame, n_hashes: int, rotate: bool = True) -> Data
     # latest-wins rotation keyed per SparkSession (session.rotate_cached):
     # repeated invocations pin at most ONE cached frame per session —
     # same discipline as operators/kmeans.py, regression-tested in
-    # tests/test_plans.py.  rotate=False is for sweeps that must hold
-    # SEVERAL k-levels' sketches live until their one action runs
-    # (dedup_k_sweep) — the caller then rotates the whole pinned list
-    # into its own slot, same posture as kmeans' pin_lloyd_handles.
+    # tests/test_plans.py.  rotate=False is for callers that pin the
+    # sketch in their OWN slot: sweeps that must hold SEVERAL k-levels'
+    # sketches live until their one action runs (dedup_k_sweep rotates
+    # the whole pinned list, same posture as kmeans' pin_lloyd_handles)
+    # and the incremental operator's tagged-union sketch.
     if rotate:
         rotate_cached("minhash_sketch", [per_doc])
     return per_doc
-
-
-def set_side_broadcastable(
-    per_doc: DataFrame, cap_bytes: int = DEFAULT_SET_BCAST_BYTES_CAP
-) -> bool:
-    """True when the per-doc shingle-set frame is small enough to ship
-    as the BUILD side of the two verify hash joins (raw bytes ≈ 8 per
-    shingle + 24 per doc row, estimated by one aggregate over the
-    already-cached sketch — a plan-build probe of the same class as the
-    auto-gate's candidate count).  Scale posture: sets grow with the
-    corpus while candidates are cap-bounded, so past this gate the r12
-    broadcast-candidates shape runs unchanged."""
-    row = per_doc.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.size("sh")).alias("tot")
-    ).first()
-    est = (row["tot"] or 0) * 8 + (row["n"] or 0) * 24
-    return est <= cap_bytes
 
 
 def _cand_from_mins(
@@ -241,47 +227,46 @@ def shingle_sets(docs: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def _gate_stats(per_doc: DataFrame, cand: DataFrame) -> "tuple[int, bool]":
-    """Both auto-gate inputs — the candidate count (broadcast-verify
-    gate) and the per-doc set-bytes estimate (verify side gate) — from
-    ONE action (r13): the two stats live on different frames, so
-    separate ``.count()`` / ``.first()`` calls cost two driver job
-    round-trips per invocation; a crossJoin of the two one-row
-    aggregates folds them into one job over the same cached data."""
-    row = (
-        cand.agg(F.count(F.lit(1)).alias("n_cand"))
-        .crossJoin(
-            per_doc.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.size("sh")).alias("tot_sh"),
-            )
-        )
-        .first()
+def _gate_stats(
+    per_doc: DataFrame, cand: "DataFrame | None"
+) -> "tuple[int | None, bool]":
+    """The verify family's only eager probe: the candidate count (for
+    the ``DEFAULT_BROADCAST_CAND_CAP`` gate) and whether the per-doc
+    sets fit ``DEFAULT_SET_BCAST_BYTES_CAP`` (raw bytes ≈ 8 per
+    shingle + 24 per doc row), from ONE driver job over the cached
+    sketch — a crossJoin of the two one-row aggregates.  Callers with
+    no candidate gate pass ``cand=None`` and get ``(None, set_bcast)``
+    from the set aggregate alone.  The cap is read from the module at
+    call time."""
+    stats = per_doc.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.sum(F.size("sh")).alias("tot_sh")
     )
+    if cand is not None:
+        stats = cand.agg(F.count(F.lit(1)).alias("n_cand")).crossJoin(stats)
+    row = stats.first()
     est = (row["tot_sh"] or 0) * 8 + (row["n_docs"] or 0) * 24
-    return row["n_cand"], est <= DEFAULT_SET_BCAST_BYTES_CAP
+    n_cand = None if cand is None else row["n_cand"]
+    return n_cand, est <= DEFAULT_SET_BCAST_BYTES_CAP
 
 
-def _verify_jaccard_pairs(
-    per_doc: DataFrame,
-    cand: DataFrame,
-    threshold: float,
-    set_bcast: "bool | None" = None,
-) -> DataFrame:
-    """Exact-jaccard verification of ``cand`` against the fused cached
-    sketch — the broadcast verify shape shared by ``minhash_lsh_pairs``
-    and the per-k sweep (plans/llm.py dedup_k_sweep).  Side choice is
-    auto-gated (r13): a small per-doc SET frame becomes the broadcast
-    BUILD side of both hash joins and the (bigger, cap-bounded)
-    candidate pairs stream — no shingle array ever crosses an exchange
-    at ANY candidate volume.  Past the set cap, the r12 shape runs:
-    candidates broadcast, set joins left to the planner.  The sf1
-    evidence for the gate: unhinted, AQE elected a SortMergeJoin that
-    sorted 4.1M pair rows carrying ~2 KB arrays (19.7 s / 307 CPU·s);
-    set-broadcast + eval_once runs 4.6 s / 107 CPU·s, identical
-    250,224 output rows."""
-    if set_bcast is None:
-        set_bcast = set_side_broadcastable(per_doc)
+def _set_overlap(per_doc: DataFrame, cand: DataFrame, set_bcast: bool) -> DataFrame:
+    """Overlap counts of every candidate pair against the per-doc
+    shingle sets of the cached sketch: ``cand``'s columns plus ``_na``
+    and ``_nb`` (set sizes) and ``_inter`` (|A∩B|).  Every set-side
+    verify — jaccard, containment, incremental, band utility, the k
+    sweep — is a final projection over this frame.
+
+    Side choice (``set_bcast``, from ``_gate_stats``): a small per-doc
+    SET frame becomes the broadcast BUILD side of both hash joins and
+    the (bigger, cap-bounded) candidate pairs stream — no shingle array
+    ever crosses an exchange at ANY candidate volume.  Past the set cap
+    the candidates broadcast and the set joins are left to the planner.
+    The sf1 evidence for the gate: unhinted, AQE elected a
+    SortMergeJoin that sorted 4.1M pair rows carrying ~2 KB arrays
+    (19.7 s / 307 CPU·s); set-broadcast + eval_once runs 4.6 s / 107
+    CPU·s, identical 250,224 output rows.  The eval_once barrier keeps
+    a threshold filter over ``_inter`` from re-evaluating the intersect
+    inside the join condition."""
     sets = per_doc.select("doc_id", "sh")
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -289,28 +274,91 @@ def _verify_jaccard_pairs(
         joined = cand.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
     else:
         joined = F.broadcast(cand).join(sa, "doc_a").join(sb, "doc_b")
-    # |A∪B| = |A|+|B|−|A∩B| over the (distinct) shingle sets —
-    # numerically identical to size(array_union(...)); the eval_once
-    # barrier keeps the threshold filter from re-evaluating the
-    # intersect inside the join condition.
-    return (
-        joined.select(
-            "doc_a",
-            "doc_b",
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-            eval_once(F.size(F.array_intersect("sh_a", "sh_b")), "_inter"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return joined.select(
+        *cand.columns,
+        F.size("sh_a").alias("_na"),
+        F.size("sh_b").alias("_nb"),
+        eval_once(F.size(F.array_intersect("sh_a", "sh_b")), "_inter"),
     )
+
+
+def _narrow_overlap(rows: DataFrame, cand: DataFrame) -> DataFrame:
+    """The all-shuffle counterpart of ``_set_overlap`` for (doc_a,
+    doc_b) pairs: the same ``_inter``/``_na``/``_nb`` columns, counted
+    by joining the NARROW (doc_id, sh) shingle rows through the pairs.
+    Every shuffle is hash-partitioned 24-byte rows — no arrays, nothing
+    broadcast, no per-doc sets, no driver-side state — the shape that
+    survives corpora whose candidates outgrow the driver or whose
+    per-doc sets exceed executor storage."""
+    counts = rows.groupBy("doc_id").agg(F.count("*").alias("n"))
+    ra = cand.join(rows.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a")
+    ri = ra.join(rows.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
+    # left-join back onto cand so zero-intersection candidates keep an
+    # _inter=0 row — without it the two shapes diverge for thresholds
+    # <= 0 (the set shape emits those rows, an inner join drops them)
+    ic = cand.join(
+        ri.groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter")),
+        ["doc_a", "doc_b"],
+        "left",
+    ).select("doc_a", "doc_b", F.coalesce("inter", F.lit(0)).alias("_inter"))
+    return ic.join(
+        counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("_na")), "doc_a"
+    ).join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("_nb")), "doc_b")
+
+
+def _plan_overlap(
+    rows: DataFrame,
+    n_hashes: int,
+    bands: int,
+    bucket_cap: int,
+    broadcast_verify: bool,
+    slot: str,
+    degree_cap: "int | None" = None,
+) -> "tuple[DataFrame, DataFrame | None]":
+    """The verify planner of ``minhash_lsh_pairs`` and
+    ``minhash_containment_pairs``: LSH candidates from (doc_id, sh)
+    rows, optionally degree-capped (``candidate_degree_cap``), turned
+    into overlap counts.  Returns ``(overlap, capped_docs)``.
+
+    ``broadcast_verify=True`` picks the shape from data, never from the
+    caller's guess: the fused cached sketch supplies lanes AND sets,
+    the final candidates are persisted in ``slot`` and ``_gate_stats``
+    runs once.  Within ``DEFAULT_BROADCAST_CAND_CAP`` pairs the verify
+    reads the cached sets (``_set_overlap``); past it the sketch cache
+    is released and the persisted candidates take ``_narrow_overlap``.
+    ``broadcast_verify=False`` is the narrow shape outright: no sketch,
+    no cache, no probe."""
+    per_doc = _per_doc_sketch(rows, n_hashes) if broadcast_verify else None
+    if per_doc is None:
+        cand = _minhash_candidates(rows, n_hashes, bands, bucket_cap)
+    else:
+        cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap)
+    capped_docs = None
+    if degree_cap is not None:
+        cand, capped_docs = candidate_degree_cap(cand, degree_cap)
+    if per_doc is not None:
+        # the candidates feed the gate count AND the verify joins — pin
+        # them so the count action is not replayed by the verify
+        cand = cand.persist()
+        rotate_cached(slot, [cand])
+        n_cand, set_bcast = _gate_stats(per_doc, cand)
+        if n_cand <= DEFAULT_BROADCAST_CAND_CAP:
+            return _set_overlap(per_doc, cand, set_bcast), capped_docs
+        # bailing to the narrow shape: the sets will not be read —
+        # release the sketch cache AND clear its slot registration
+        # (evict_cached, ADVICE r12: a bare unpersist left a dead
+        # handle in 'minhash_sketch')
+        evict_cached("minhash_sketch", per_doc)
+    return _narrow_overlap(rows, cand), capped_docs
+
+
+def _jaccard() -> "F.Column":
+    """Jaccard over an overlap frame's counts: |A∪B| = |A|+|B|−|A∩B|
+    on distinct sets — numerically identical to size(array_union)."""
+    return (
+        F.col("_inter").cast("double")
+        / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
+    ).alias("jaccard")
 
 
 def minhash_lsh_pairs(
@@ -320,8 +368,7 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.8,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    broadcast_verify: bool | None = None,
-    broadcast_cand_cap: int = DEFAULT_BROADCAST_CAND_CAP,
+    broadcast_verify: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs via minhash LSH, verified with exact
     shingle jaccard.  rows/band = n_hashes//bands; P(candidate) ≈
@@ -341,91 +388,18 @@ def minhash_lsh_pairs(
        bucket — a degenerate bucket buffers kilobytes, not the
        shingle-array megabytes of a struct-collecting formulation),
        pairs are deduped across bands BEFORE verification.
-    3. verify — exact jaccard for the candidate pairs only, via one of
-       two shapes chosen by ``broadcast_verify``: broadcast-candidates
-       (zero array shuffles, reads the cached sets) or the all-shuffle
-       narrow-row intersection counting below, which keeps TWO uncached
-       corpus passes but never builds sets nor caches — for corpora
-       whose candidate set outgrows the driver or whose per-doc
-       sketch+set exceeds executor storage comfort.
-
-    ``broadcast_verify=None`` (default) AUTO-gates the shape from data
-    instead of trusting the caller (r3 advice): the candidate pairs are
-    computed from the cached sketch, persisted, and COUNTED — a cheap
-    band-aggregate action over already-cached data — and the broadcast
-    shape is taken only when the count fits ``broadcast_cand_cap``
-    (default 5M pairs ≈ 80 MB broadcast).  Over the cap, the sketch
-    cache is released immediately and the all-shuffle shape runs with
-    the persisted candidates reused.  Callers at scales where even the
-    cached sketch is unaffordable should pass ``broadcast_verify=False``
-    explicitly — that path still touches nothing but narrow rows."""
-    rows = _shingle_rows(docs, k)
-    per_doc = cand = None
-    set_bcast = None
-    if broadcast_verify is None:
-        per_doc = _per_doc_sketch(rows, n_hashes)
-        cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap).persist()
-        rotate_cached("minhash_cand", [cand])
-        n_cand, set_bcast = _gate_stats(per_doc, cand)
-        broadcast_verify = n_cand <= broadcast_cand_cap
-        if not broadcast_verify:
-            # bailing to the shuffle shape: the per-doc sets will not be
-            # read — release the fused sketch cache now AND clear its
-            # slot registration (evict_cached, ADVICE r12: a bare
-            # unpersist left a dead handle in 'minhash_sketch'), keep
-            # only the (narrow) candidate pairs.
-            evict_cached("minhash_sketch", per_doc)
-            per_doc = None
-    if broadcast_verify:
-        # Verify joins over the fused cached sketch (_per_doc_sketch).
-        # Side choice is auto-gated (r13): when the per-doc SET frame is
-        # small enough it becomes the broadcast BUILD side of both hash
-        # joins and the (bigger, cap-bounded) candidate pairs stream —
-        # no shingle array ever crosses an exchange at ANY candidate
-        # volume.  Past the set cap, the r12 shape runs: candidates
-        # broadcast, set joins left to the planner.  The sf1 evidence
-        # for the gate: unhinted, AQE elected a SortMergeJoin that
-        # sorted 4.1M pair rows carrying ~2 KB arrays (19.7 s / 307
-        # CPU·s); set-broadcast + eval_once runs 4.6 s / 107 CPU·s,
-        # identical 250,224 output rows.
-        if per_doc is None:
-            per_doc = _per_doc_sketch(rows, n_hashes)
-        if cand is None:
-            cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap)
-        return _verify_jaccard_pairs(per_doc, cand, threshold, set_bcast)
-    # All-shuffle fallback for corpora where the candidate set itself is
-    # too large to broadcast: intersection sizes come from joining the
-    # NARROW (doc_id, sh) shingle rows through the pairs — every shuffle
-    # is hash-partitioned 24-byte rows, no arrays, no driver-side state.
-    # No per-doc sets are built (and nothing is cached) on this path —
-    # unless auto-gating above already persisted the candidate pairs,
-    # which are then reused instead of recomputed.
-    if cand is None:
-        cand = _minhash_candidates(rows, n_hashes, bands, bucket_cap)
-    counts = rows.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ra = cand.join(rows.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a")
-    ri = ra.join(rows.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
-    # left-join back onto cand so zero-intersection candidates keep a
-    # jaccard=0.0 row — without it the two verify shapes diverge for
-    # threshold <= 0 (broadcast emits those rows, inner-join drops them)
-    ic = cand.join(
-        ri.groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter")),
-        ["doc_a", "doc_b"],
-        "left",
-    ).select("doc_a", "doc_b", F.coalesce("inter", F.lit(0)).alias("inter"))
-    return (
-        ic.join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    3. verify — exact jaccard for the candidate pairs only, planned by
+       ``_plan_overlap``: ``broadcast_verify=True`` (default) gates
+       the shape from data (cached-set joins within the candidate cap,
+       the narrow all-shuffle counting past it);
+       ``broadcast_verify=False`` runs the narrow shape outright, for
+       scales where even the cached sketch is unaffordable — it keeps
+       TWO uncached corpus passes but touches nothing but narrow
+       rows."""
+    overlap, _ = _plan_overlap(
+        _shingle_rows(docs, k), n_hashes, bands, bucket_cap, broadcast_verify, "minhash_cand"
     )
+    return overlap.select("doc_a", "doc_b", _jaccard()).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_incremental_pairs(
@@ -451,23 +425,16 @@ def minhash_incremental_pairs(
     collect (doc_id, is_inc) — 16 B per member, still cap-bounded.
     Returns (doc_a, doc_b, jaccard, pair_type) with pair_type
     'cross' (base↔incoming) or 'new' (incoming↔incoming)."""
-    from pyspark import StorageLevel
-
     tagged = base.select("doc_id", "text").withColumn(
         "is_inc", F.lit(False)
     ).unionByName(incoming.select("doc_id", "text").withColumn("is_inc", F.lit(True)))
-    rows = _shingle_rows(tagged, k)
     flags = tagged.select("doc_id", "is_inc")
-    lanes = rows.select("doc_id", "sh", *H.minhash_lane_cols(F.col("sh"), n_hashes))
-    # persisted (r13): the sketch feeds the band stage AND both verify
-    # set sides — one scan+agg instead of three.  Its OWN rotation slot:
-    # the tagged-union input plan is never sameSemantics with the plain
+    # the fused sketch feeds the band stage AND both verify set sides —
+    # one scan+agg instead of three.  Its OWN rotation slot: the
+    # tagged-union input plan is never sameSemantics with the plain
     # corpus sketch, so sharing 'minhash_sketch' would evict the entry
     # every other dedup key in the session reads.
-    per_doc = lanes.groupBy("doc_id").agg(
-        *[F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)],
-        F.collect_set("sh").alias("sh"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    per_doc = _per_doc_sketch(_shingle_rows(tagged, k), n_hashes, rotate=False)
     rotate_cached("minhash_sketch_inc", [per_doc])
     mins = per_doc.drop("sh").join(flags, "doc_id")
     r = n_hashes // bands
@@ -519,30 +486,14 @@ def minhash_incremental_pairs(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sets = per_doc.select("doc_id", "sh")
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    # same r13 side gate + eval_once barrier as the full-LSH verify
-    if set_side_broadcastable(per_doc):
-        joined = cand.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
-    else:
-        joined = F.broadcast(cand).join(sa, "doc_a").join(sb, "doc_b")
+    # same set-side verify as the full LSH; no candidate gate here
+    _, set_bcast = _gate_stats(per_doc, None)
     return (
-        joined.select(
-            "doc_a",
-            "doc_b",
-            "both_inc",
-            F.size("sh_a").alias("_na"),
-            F.size("sh_b").alias("_nb"),
-            eval_once(F.size(F.array_intersect("sh_a", "sh_b")), "_inter"),
-        )
+        _set_overlap(per_doc, cand, set_bcast)
         .select(
             "doc_a",
             "doc_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
+            _jaccard(),
             F.when(F.col("both_inc"), F.lit("new")).otherwise(F.lit("cross")).alias("pair_type"),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -700,14 +651,7 @@ def token_jaccard_pairs(
             F.size("b.tok").alias("_nb"),
             eval_once(F.size(F.array_intersect("a.tok", "b.tok")), "_inter"),
         )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("_inter").cast("double")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", _jaccard())
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -851,32 +795,34 @@ def embedding_cosine_pairs(
     embs: DataFrame,
     threshold: float = 0.4,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    broadcast_verify: "bool | None" = None,
+    broadcast_verify: bool = True,
 ) -> DataFrame:
     """Near-dup embedding pairs with cosine ≥ threshold, candidates from
     banded sign-LSH (see embedding_candidate_pairs), verified by exact
     cosine.
 
-    Verify side choice (r13, the same auto-gate as the minhash verify):
-    when the per-vector frame estimates under
-    ``DEFAULT_SET_BCAST_BYTES_CAP`` (bytes ≈ rows · (8·width + 24),
-    from the cached plan-build probes — no extra job), BOTH vector
-    sides broadcast as hash-join BUILD sides and the candidate pairs
-    STREAM — candidates are clique-quadratic (the 10× replica set
-    measured 45.7M, a ~0.7 GB broadcast under the r12 posture) while
-    the vectors grow only linearly.  Past the vector cap,
-    ``broadcast_verify`` keeps its old meaning: None/True broadcasts
-    the candidate side (right while candidates fit the driver), False
-    runs plain shuffles (vectors hash-partitioned on vec_id — the
-    shape that survives when neither side fits)."""
+    ``broadcast_verify=True`` (default) gates the verify side from data
+    (r13, the vector analogue of the minhash side gate): when the
+    per-vector frame estimates under ``DEFAULT_SET_BCAST_BYTES_CAP``
+    (bytes ≈ rows · (8·width + 24), from the cached plan-build probes —
+    no extra job), BOTH vector sides broadcast as hash-join BUILD sides
+    and the candidate pairs STREAM — candidates are clique-quadratic
+    (the 10× replica set measured 45.7M, a ~0.7 GB broadcast) while the
+    vectors grow only linearly; past the cap the candidate side
+    broadcasts.  ``broadcast_verify=False`` puts no broadcast hint
+    anywhere: plain shuffle joins with the vectors hash-partitioned on
+    vec_id — the shape for drivers too tight for either broadcast."""
     cand = embedding_candidate_pairs(embs, bucket_cap)
     # r13: width-unrolled codegen dot (bit-identical left fold) and the
     # eval_once barrier so the threshold filter does not re-evaluate the
     # dot in the join condition — same rows, one fold per pair
     width = V.probe_width(embs)
-    vecs_bytes = V.probe_count(embs) * (8 * (width or 0) + 24)
-    vec_bcast = width is not None and vecs_bytes <= DEFAULT_SET_BCAST_BYTES_CAP
-    if not vec_bcast and broadcast_verify is not False:
+    vec_bcast = (
+        broadcast_verify
+        and width is not None
+        and V.probe_count(embs) * (8 * width + 24) <= DEFAULT_SET_BCAST_BYTES_CAP
+    )
+    if broadcast_verify and not vec_bcast:
         cand = F.broadcast(cand)
     vecs = spread(embs).select(
         "vec_id", V.to_double(F.col("embedding")).alias("v")
@@ -1033,129 +979,47 @@ def minhash_containment_pairs(
     bucket_cap: int = DEFAULT_BUCKET_CAP,
     degree_cap: int | None = DEFAULT_DEGREE_CAP,
     evidence: bool = False,
-    broadcast_verify: bool | None = None,
-    broadcast_cand_cap: int = DEFAULT_BROADCAST_CAND_CAP,
+    broadcast_verify: bool = True,
 ) -> DataFrame:
     """Directed shingle containment over minhash-LSH band candidates —
     the asymmetric-overlap generalization of ``minhash_lsh_pairs``,
-    with the SAME auto-gated verify-shape choice (r12):
+    planned by the SAME ``_plan_overlap`` after the degree cap:
 
-    - broadcast shape (candidate count ≤ ``broadcast_cand_cap``): the
-      fused ``_per_doc_sketch`` scan+agg supplies lanes AND shingle
-      sets from ONE cached corpus pass; the only HINT is on the
-      (degree-capped) candidate pairs — the per-doc set sides are
-      left to the planner, which may elect a runtime broadcast of the
-      cached sets at small SF and falls back to shuffle joins at
-      scale (the same posture as the jaccard verify since r3).  The
-      r11 narrow-only shape re-ran the exploded md5 scan four times
-      and AQE broadcast the full multi-million-row EXPLODED shingle
-      frame twice (measured 7.1 s wall / 92 CPU·s at sf0.1 vs the
-      jaccard path's 7.7 CPU·s on the same sketch); this shape is the
-      fix.
-    - narrow all-shuffle fallback (over the cap, or forced with
-      ``broadcast_verify=False``): intersection sizes from joining
-      (doc_id, sh) 24-byte rows through the pairs, set sizes from a
-      per-doc count — nothing broadcasts, nothing wide moves; the
-      shape that survives corpora whose post-cap candidate set
-      outgrows the driver.
-
-    ``broadcast_verify=None`` (default) counts the post-cap candidates
-    (persisted, rotate_cached-bounded) and picks the shape from data —
-    never from the caller's guess.  With the default degree cap the
-    candidate count is ≤ n·cap, so the gate bound is reached only past
-    ~300M docs; the fallback stays regression-pinned either way.
+    - ``broadcast_verify=True`` (default): the fused ``_per_doc_sketch``
+      scan+agg supplies lanes AND shingle sets from ONE cached corpus
+      pass; the post-cap candidates are persisted and gated — within
+      ``DEFAULT_BROADCAST_CAND_CAP`` they verify against the cached
+      sets, past it through the narrow shape.  (The r11 narrow-only
+      shape re-ran the exploded md5 scan four times and AQE broadcast
+      the full multi-million-row EXPLODED shingle frame twice: 7.1 s
+      wall / 92 CPU·s at sf0.1 vs the jaccard path's 7.7 CPU·s on the
+      same sketch.)  With the default degree cap the candidate count
+      is ≤ n·cap, so the cap is reached only past ~300M docs.
+    - ``broadcast_verify=False``: the narrow all-shuffle shape outright
+      — intersection sizes from joining (doc_id, sh) 24-byte rows
+      through the pairs, set sizes from a per-doc count; nothing
+      broadcasts, nothing wide moves.
 
     Returns (doc_a, doc_b, inter_n, cont_a_in_b, cont_b_in_a) for
     pairs with max containment ≥ τ, plus loud ``capped_doc`` evidence
     rows when ``evidence`` and a degree cap are set — identical values
     from both shapes (the parity test pins it)."""
-    from pyspark import StorageLevel
-
-    rows = _shingle_rows(docs, k)
-    per_doc = None
-    if broadcast_verify is None or broadcast_verify:
-        # fused lanes+sets pass, cached; canonical plan shared with
-        # minhash_lsh_pairs so a session computing both (the bench
-        # sequence; the calibration key) hits ONE cache entry
-        per_doc = _per_doc_sketch(rows, n_hashes)
-        cand = _cand_from_mins(per_doc.drop("sh"), n_hashes, bands, bucket_cap)
-    else:
-        # _minhash_candidates already returns cross-band-deduped pairs
-        cand = _minhash_candidates(rows, n_hashes, bands, bucket_cap)
-    capped_docs = None
-    if degree_cap is not None:
-        cand, capped_docs = candidate_degree_cap(cand, degree_cap)
-    set_bcast = None
-    if broadcast_verify is None:
-        # the post-cap pairs feed the gate count AND the verify joins
-        # (and the evidence union when requested) — pin them so the
-        # count action does not replay the nomination pipeline
-        cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        rotate_cached("containment_kept", [cand])
-        n_cand, set_bcast = _gate_stats(per_doc, cand)
-        broadcast_verify = n_cand <= broadcast_cand_cap
-        if not broadcast_verify:
-            # bailing to the shuffle shape: the per-doc sets will not
-            # be read — release the fused sketch cache and clear its
-            # slot registration (evict_cached, ADVICE r12)
-            evict_cached("minhash_sketch", per_doc)
-            per_doc = None
-    if broadcast_verify:
-        # same r13 side gate + eval_once barrier as the jaccard verify:
-        # small set frames broadcast (pairs stream, no array exchanges),
-        # big ones fall back to the r12 broadcast-candidates shape; the
-        # intersect is computed once per pair either way
-        if set_bcast is None:
-            set_bcast = set_side_broadcastable(per_doc)
-        sets = per_doc.select("doc_id", "sh")
-        sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-        sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-        if set_bcast:
-            joined = cand.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
-        else:
-            joined = F.broadcast(cand).join(sa, "doc_a").join(sb, "doc_b")
-        pairs = (
-            joined.select(
-                "doc_a",
-                "doc_b",
-                F.size("sh_a").alias("_na"),
-                F.size("sh_b").alias("_nb"),
-                eval_once(F.size(F.array_intersect("sh_a", "sh_b")), "_inter"),
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                F.col("_inter").cast("int").alias("inter_n"),
-                (F.col("_inter").cast("double") / F.col("_na").cast("double")).alias("cont_a_in_b"),
-                (F.col("_inter").cast("double") / F.col("_nb").cast("double")).alias("cont_b_in_a"),
-            )
-            .filter(
-                F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= threshold
-            )
-        )
-    else:
-        counts = rows.groupBy("doc_id").agg(F.count("*").alias("n"))
-        ra = cand.join(rows.select(F.col("doc_id").alias("doc_a"), "sh"), "doc_a")
-        ri = ra.join(rows.select(F.col("doc_id").alias("doc_b"), "sh"), ["doc_b", "sh"])
-        ic = cand.join(
-            ri.groupBy("doc_a", "doc_b").agg(F.count("*").alias("inter")),
-            ["doc_a", "doc_b"],
-            "left",
-        ).select("doc_a", "doc_b", F.coalesce("inter", F.lit(0)).alias("inter"))
-        pairs = (
-            ic.join(counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-            .join(counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.col("inter").cast("int").alias("inter_n"),
-                (F.col("inter").cast("double") / F.col("na").cast("double")).alias("cont_a_in_b"),
-                (F.col("inter").cast("double") / F.col("nb").cast("double")).alias("cont_b_in_a"),
-            )
-            .filter(
-                F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= threshold
-            )
-        )
+    overlap, capped_docs = _plan_overlap(
+        _shingle_rows(docs, k),
+        n_hashes,
+        bands,
+        bucket_cap,
+        broadcast_verify,
+        "containment_kept",
+        degree_cap,
+    )
+    pairs = overlap.select(
+        "doc_a",
+        "doc_b",
+        F.col("_inter").cast("int").alias("inter_n"),
+        (F.col("_inter").cast("double") / F.col("_na").cast("double")).alias("cont_a_in_b"),
+        (F.col("_inter").cast("double") / F.col("_nb").cast("double")).alias("cont_b_in_a"),
+    ).filter(F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= threshold)
     if not evidence:
         return pairs
     tagged = pairs.select(

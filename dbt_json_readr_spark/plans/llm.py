@@ -3121,22 +3121,10 @@ def dedup_band_utility(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.min("band").alias("min_band"))
     )
-    sets = per_doc.select("doc_id", "sh")
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    # r13 side gate (operators/dedup.py): small set frames broadcast so
-    # the pair rows stream and no shingle array crosses an exchange;
-    # past the cap the candidate side broadcasts as in r12
-    if D.set_side_broadcastable(per_doc):
-        joined = pairs.join(F.broadcast(sa), "doc_a").join(F.broadcast(sb), "doc_b")
-    else:
-        joined = F.broadcast(pairs).join(sa, "doc_a").join(sb, "doc_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    # |A∪B| = |A|+|B|−|A∩B|: same value, no union array built per pair
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = joined.select(
-        "min_band", (inter.cast("double") / union.cast("double")).alias("j")
-    )
+    # the shared set-side verify (operators/dedup.py _set_overlap);
+    # no candidate gate here — the side gate is the only probe
+    _, set_bcast = D._gate_stats(per_doc, None)
+    jac = D._set_overlap(per_doc, pairs, set_bcast).select("min_band", D._jaccard())
     levels = spark.range(1, _MH_BANDS + 1).select(
         F.col("id").cast("int").alias("n_bands")
     )
@@ -3146,9 +3134,9 @@ def dedup_band_utility(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_bands")
         .agg(
             F.count(F.lit(1)).alias("n_candidates"),
-            F.sum((F.col("j") >= _MH_TAU).cast("long")).alias("n_verified"),
+            F.sum((F.col("jaccard") >= _MH_TAU).cast("long")).alias("n_verified"),
             (
-                F.sum((F.col("j") >= _MH_TAU).cast("long")).cast("double")
+                F.sum((F.col("jaccard") >= _MH_TAU).cast("long")).cast("double")
                 / F.count(F.lit(1)).cast("double")
             ).alias("precision"),
         )
@@ -3635,11 +3623,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_inter").alias("inter_n"),
             (F.col("_inter").cast("double") / F.col("_na").cast("double")).alias("cont_a_in_b"),
             (F.col("_inter").cast("double") / F.col("_nb").cast("double")).alias("cont_b_in_a"),
-            (
-                # |A∪B| = |A|+|B|−|A∩B|: same value, no union array
-                F.col("_inter").cast("double")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")).cast("double")
-            ).alias("jaccard"),
+            D._jaccard(),
         )
         .filter(F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a")) >= _CONT_TAU)
     )
@@ -4489,7 +4473,12 @@ def dedup_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 per_doc.drop("sh"), _MH_N, _MH_BANDS, D.DEFAULT_BUCKET_CAP
             ).persist()
             pinned += [per_doc, cand]
-            verified = D._verify_jaccard_pairs(per_doc, cand, _MH_TAU)
+            _, set_bcast = D._gate_stats(per_doc, None)
+            verified = (
+                D._set_overlap(per_doc, cand, set_bcast)
+                .select(D._jaccard())
+                .filter(F.col("jaccard") >= _MH_TAU)
+            )
             row = (
                 cand.agg(F.count(F.lit(1)).alias("n_candidates"))
                 .crossJoin(

@@ -157,10 +157,13 @@ def rotate_cached(slot: str, frames: list) -> None:
     keys that all start from one minhash sketch) therefore hit a warm
     cache instead of rebuilding it, while a changed input plan still
     rotates the stale cache out.  Deterministic plans make the reuse
-    value-safe; the handle bound per slot is unchanged."""
-    if not frames:
+    value-safe; the handle bound per slot is unchanged.
+
+    An empty ``frames`` list (a sweep that failed before its first pin)
+    releases the active session's slot and removes it."""
+    session = frames[0].sparkSession if frames else SparkSession.getActiveSession()
+    if session is None:
         return
-    session = frames[0].sparkSession
     slots = _CACHE_SLOTS.setdefault(session, {})
     for old in slots.get(slot, []):
         try:
@@ -178,7 +181,10 @@ def rotate_cached(slot: str, frames: list) -> None:
             # unreachable checkpointed frame is safe; plain persisted
             # frames see the identical unpersist they always did.
             release_iter_handle(old)
-    slots[slot] = list(frames)
+    if frames:
+        slots[slot] = list(frames)
+    else:
+        slots.pop(slot, None)
 
 
 def evict_cached(slot: str, frame) -> None:

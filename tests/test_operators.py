@@ -90,32 +90,35 @@ def test_minhash_degenerate_bucket_stress(spark):
 
 
 def test_minhash_verify_paths_agree(spark):
-    """broadcast-candidates and all-shuffle verify must be value-equal:
-    inter/(na+nb-inter) on narrow rows is the same jaccard as
-    |∩|/|∪| on collected sets."""
+    """The gated set-side verify (default) and the all-shuffle verify
+    must be value-equal: inter/(na+nb-inter) on narrow rows is the same
+    jaccard as |∩|/|∪| on collected sets."""
     base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     rows = [(1, base, "en"), (2, base.replace("lazy", "very lazy", 1), "en"),
             (3, base + " tail", "en"), (4, "totally unrelated text here", "en")]
-    a = D.minhash_lsh_pairs(docs(spark, rows), broadcast_verify=True)
+    a = D.minhash_lsh_pairs(docs(spark, rows))
     b = D.minhash_lsh_pairs(docs(spark, rows), broadcast_verify=False)
     sa = {(r.doc_a, r.doc_b, r.jaccard) for r in a.collect()}
     sb = {(r.doc_a, r.doc_b, r.jaccard) for r in b.collect()}
     assert sa == sb and sa
 
 
-def test_minhash_auto_gate_picks_shuffle_over_cand_cap(spark):
-    """broadcast_verify=None must flip to the all-shuffle verify when the
-    candidate-pair count exceeds broadcast_cand_cap: the resulting plan
-    may not broadcast the candidate set (no broadcast hint on the verify
-    join) and must still produce the exact pair set (r3 advice item 5)."""
+def test_minhash_auto_gate_picks_shuffle_over_cand_cap(spark, monkeypatch):
+    """The default gated verify must flip to the all-shuffle verify when
+    the candidate-pair count exceeds DEFAULT_BROADCAST_CAND_CAP: the
+    resulting plan may not broadcast either side (no broadcast hint on
+    the verify joins) and must still produce the exact pair set (r3
+    advice item 5)."""
     base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     rows = [(i, base + f" tail {i % 2}", "en") for i in range(1, 31)]
-    over = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=10)
+    monkeypatch.setattr(D, "DEFAULT_BROADCAST_CAND_CAP", 10)
+    over = D.minhash_lsh_pairs(docs(spark, rows))
     # all 30 docs near-dup → C(30,2)=435 candidates > 10 → shuffle shape:
-    # the broadcast shape wraps the candidate set in an explicit
-    # broadcast hint; the shuffle shape must not.
+    # the broadcast shape wraps a verify side in an explicit broadcast
+    # hint; the shuffle shape must not.
     assert "ResolvedHint" not in over._jdf.queryExecution().analyzed().toString()
-    under = D.minhash_lsh_pairs(docs(spark, rows), broadcast_cand_cap=5_000_000)
+    monkeypatch.setattr(D, "DEFAULT_BROADCAST_CAND_CAP", 5_000_000)
+    under = D.minhash_lsh_pairs(docs(spark, rows))
     assert "ResolvedHint" in under._jdf.queryExecution().analyzed().toString()
     so = {(r.doc_a, r.doc_b, r.jaccard) for r in over.collect()}
     su = {(r.doc_a, r.doc_b, r.jaccard) for r in under.collect()}
@@ -993,14 +996,14 @@ def test_degree_cap_bounds_clique_and_keeps_min_id_connectivity(spark):
     assert "status" not in full.columns
 
 
-def test_containment_verify_shapes_agree_and_auto_gate_switches(spark):
+def test_containment_verify_shapes_agree_and_auto_gate_switches(spark, monkeypatch):
     """r12: minhash_containment_pairs gained the same auto-gated verify
     shape as minhash_lsh_pairs.  Contract: (a) the broadcast shape and
     the narrow all-shuffle shape return IDENTICAL rows (pairs and
     capped_doc evidence alike), (b) the auto gate actually switches —
-    cap 0 must take the narrow shape (no broadcast-hinted candidate
-    join in the analyzed plan), the default must take the broadcast
-    shape on a small corpus — and both still match."""
+    a candidate cap of 0 must take the narrow shape (no broadcast-hinted
+    verify join in the analyzed plan), the default must take the
+    broadcast shape on a small corpus — and both still match."""
     from dbt_json_readr_spark.operators import dedup as D
     from dbt_json_readr_spark.plans import explain
 
@@ -1015,10 +1018,10 @@ def test_containment_verify_shapes_agree_and_auto_gate_switches(spark):
         )
         return out, sorted(map(tuple, out.collect()))
 
-    bcast_df, bcast = run(broadcast_verify=True)
+    bcast_df, bcast = auto_b_df, auto_b = run()      # gate: small → broadcast
     narrow_df, narrow = run(broadcast_verify=False)
-    auto_b_df, auto_b = run()                        # gate: small → broadcast
-    auto_n_df, auto_n = run(broadcast_cand_cap=0)    # gate: forced narrow
+    monkeypatch.setattr(D, "DEFAULT_BROADCAST_CAND_CAP", 0)
+    auto_n_df, auto_n = run()                        # gate: forced narrow
     assert bcast, "fixture produced no pairs — test is vacuous"
     assert bcast == narrow == auto_b == auto_n
     # the gate's shape choice is visible as the broadcast hint on the
@@ -1131,6 +1134,82 @@ def test_probe_width_reads_table_and_handles_empty(spark, sf_dir):
     embs = load(spark, sf_dir, "embeddings")
     assert V.probe_width(embs) == 64
     empty = embs.filter(F.lit(False))
-    assert V.probe_width(empty) in (None, 64)  # files key may cache 64
+    assert V.probe_width(empty) is None
     truly_empty = spark.createDataFrame([], "embedding: array<float>")
     assert V.probe_width(truly_empty) is None
+
+
+def test_probe_cache_keys_on_the_plan_not_the_files(spark, sf_dir):
+    """A derived frame over the same files is a different plan: probing
+    the raw table first must not hand its count to a filtered frame
+    (the cache used to key on inputFiles() alone).  Two bare loads of
+    one path are the same plan and still share one entry."""
+    from dbt_json_readr_spark.functions import vectors as V
+    from dbt_json_readr_spark.sources.tables import load
+
+    raw = load(spark, sf_dir, "embeddings")
+    ids = [r.vec_id for r in raw.select("vec_id").collect()]
+    n_even = sum(1 for i in ids if i % 2 == 0)
+    assert 0 < n_even < len(ids)
+    assert V.probe_count(raw) == len(ids)
+    assert V.probe_count(raw.filter(F.col("vec_id") % 2 == 0)) == n_even
+    n_entries = len(V._PROBE_CACHE[spark])
+    assert V.probe_count(load(spark, sf_dir, "embeddings")) == len(ids)
+    assert len(V._PROBE_CACHE[spark]) == n_entries
+
+
+def test_rotate_cached_empty_list_releases_the_slot(spark):
+    """A sweep that fails before its first pin hands rotate_cached an
+    empty list; the slot's previous frames must be released and the
+    slot removed, not silently kept pinned."""
+    from dbt_json_readr_spark.session import _CACHE_SLOTS, rotate_cached
+
+    df = spark.range(50).persist()
+    df.count()
+    rotate_cached("empty_rotation_slot", [df])
+    assert df.storageLevel.useMemory
+    rotate_cached("empty_rotation_slot", [])
+    assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
+    assert "empty_rotation_slot" not in _CACHE_SLOTS[spark]
+
+
+def test_verify_family_runs_one_gate_probe(spark, sf_dir, monkeypatch):
+    """Every gated verify pays exactly ONE eager probe (_gate_stats);
+    the k sweep pays one per k; the narrow shape pays none; and the
+    embedding verify's broadcast_verify=False puts no broadcast hint
+    anywhere (it used to be overridden by the vector-side gate)."""
+    from dbt_json_readr_spark.plans import llm
+    from dbt_json_readr_spark.sources.tables import load
+
+    calls = []
+    real = D._gate_stats
+
+    def spy(per_doc, cand):
+        calls.append(cand)
+        return real(per_doc, cand)
+
+    monkeypatch.setattr(D, "_gate_stats", spy)
+    base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
+    d = docs(spark, [(i, base + f" tail {i % 3}", "en") for i in range(1, 13)])
+    inc = docs(spark, [(200, base, "en")])
+    for run in (
+        lambda: D.minhash_lsh_pairs(d),
+        lambda: D.minhash_containment_pairs(d),
+        lambda: D.minhash_incremental_pairs(d, inc),
+    ):
+        calls.clear()
+        run()
+        assert len(calls) == 1
+    calls.clear()
+    D.minhash_lsh_pairs(d, broadcast_verify=False)
+    D.minhash_containment_pairs(d, broadcast_verify=False)
+    assert calls == []
+    llm.dedup_k_sweep(spark, sf_dir)
+    assert len(calls) == len(llm._KSWEEP)
+
+    embs = load(spark, sf_dir, "embeddings")
+    plain = D.embedding_cosine_pairs(embs, broadcast_verify=False)
+    assert "ResolvedHint" not in plain._jdf.queryExecution().analyzed().toString()
+    gated = D.embedding_cosine_pairs(embs)
+    assert "ResolvedHint" in gated._jdf.queryExecution().analyzed().toString()
+    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, gated.collect()))
